@@ -286,8 +286,18 @@ def confluent_frame(schema_id: int, body: bytes) -> bytes:
     return CONFLUENT_MAGIC + schema_id.to_bytes(4, "big") + body
 
 
+# magic byte + 4-byte schema id: a shorter record has no Avro body
+FRAME_HEADER_LEN = 5
+SHORT_FRAME_MSG = (
+    f"not Confluent wire format (frame shorter than the "
+    f"{FRAME_HEADER_LEN}-byte header)"
+)
+
+
 def confluent_unframe(data: bytes) -> tuple[int, bytes]:
-    if not data or data[0:1] != CONFLUENT_MAGIC:
+    if len(data) < FRAME_HEADER_LEN:
+        raise ValueError(SHORT_FRAME_MSG)
+    if data[0:1] != CONFLUENT_MAGIC:
         raise ValueError("not Confluent wire format (bad magic byte)")
     return int.from_bytes(data[1:5], "big"), data[5:]
 

@@ -192,6 +192,16 @@ def foreach_batch_upsert(
         if merge_fn is not None:
             merge_fn(batch_df, batch_id)
             return
+        # the bucket collect, the key broadcast and the write each run
+        # the batch plan; in a streaming foreachBatch that plan ends in
+        # the upstream stateful stage, so it is computed once and reused
+        batch_df.persist()
+        try:
+            _merge(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = (
             dedupe_latest(batch_df, key_col, order_cols) if order_cols else batch_df
@@ -248,8 +258,11 @@ def _commit_generation(
     """Write the merged touched buckets as a new generation and swap
     the manifest atomically (shared tail of every store writer)."""
     gen = f"gen-{batch_id:010d}-{uuid.uuid4().hex[:8]}"
+    # hash-partitioning on the bucket id keeps each bucket in one task
+    # (one file per bucket directory) with no more tasks than cores
+    cores = merged.sparkSession.sparkContext.defaultParallelism
     (
-        merged.repartition(len(affected), _BUCKET)
+        merged.repartition(min(len(affected), cores), _BUCKET)
         .write.partitionBy(_BUCKET)
         .mode("errorifexists")
         .parquet(f"{target_path}/{gen}")

@@ -13,11 +13,17 @@ engine-native read path: a directory of record-log files (each record
     spark.read.format("confluentavro").schema(struct)
          .option("path", dir).option("avro_schema", json).load()
 
-Scale shape: planning lists files; ONE InputPartition per file, so a
+Scale shape: the batch reader plans ONE InputPartition per file, so a
 1000-file log drives 1000 parallel decode tasks (the Kafka-partition
-analog), each streaming through its file without materializing it.
-Decode uses the pure-Python Avro codec (`serde/avro.py`, written from
-the Avro spec) -- the identical bytes-level path the wire tests pin.
+analog).  The stream reader packs consecutive new (file, record-range)
+pieces into one InputPartition up to PARTITION_RECORDS records: a
+trigger over many small segments runs a few tasks instead of one per
+segment, while a range at or above the budget still gets its own task.
+The vectorized lane loads each file of a task whole into one buffer
+before decoding its range; only the row lane streams.
+Decode uses the vectorized numpy lane (`serde/avro_vec.py`) with the
+pure-Python Avro codec (`serde/avro.py`, written from the Avro spec)
+as its fallback -- the identical bytes-level path the wire tests pin.
 
 Transfer shape: both the batch and the streaming reader yield
 `pyarrow.RecordBatch`es (records decoded executor-side, batched
@@ -49,6 +55,10 @@ RECORD_LEN = _struct.Struct(">I")
 # records per yielded pyarrow.RecordBatch; bounds executor memory to
 # ~batch * record-size while amortizing the per-batch Arrow IPC cost
 ARROW_BATCH_SIZE = 4096
+
+# record budget of one packed stream InputPartition: small segments
+# share a task up to this many records; a larger range stands alone
+PARTITION_RECORDS = 16 * ARROW_BATCH_SIZE
 
 
 def _count_records(path: str) -> int:
@@ -114,6 +124,11 @@ def _scan_frame_bodies(path: str, skip: int = 0, stop: int | None = None):
     gathers in bounds at the final record."""
     import numpy as np
 
+    from nearscan_kafka_streams_spark.serde.avro import (
+        FRAME_HEADER_LEN,
+        SHORT_FRAME_MSG,
+    )
+
     size = os.path.getsize(path)
     buf = np.zeros(size + 16, dtype=np.uint8)
     with open(path, "rb") as fh:
@@ -135,6 +150,8 @@ def _scan_frame_bodies(path: str, skip: int = 0, stop: int | None = None):
         if stop is not None and i >= stop:
             break
         if i >= skip:
+            if n < FRAME_HEADER_LEN:
+                raise ValueError(SHORT_FRAME_MSG)
             starts.append(pos + 4)
         pos += 4 + n
         i += 1
@@ -311,11 +328,33 @@ class ConfluentAvroDataSource(DataSource):
         return ConfluentAvroWriter(schema, self.options, overwrite)
 
 
-class _RangePartition(InputPartition):
-    def __init__(self, path: str, skip: int, stop: int):
-        self.path = path
-        self.skip = skip
-        self.stop = stop
+class _RangesPartition(InputPartition):
+    """Consecutive ``(path, skip, stop)`` record ranges read by one
+    task, in order."""
+
+    def __init__(self, ranges: list[tuple[str, int, int]]):
+        self.ranges = ranges
+
+
+def pack_ranges(
+    ranges: list[tuple[str, int, int]], budget: int = PARTITION_RECORDS
+) -> list[_RangesPartition]:
+    """Group consecutive ranges into partitions of at most ``budget``
+    records.  A range is never split: one at or above the budget gets
+    a partition to itself."""
+    out: list[_RangesPartition] = []
+    group: list[tuple[str, int, int]] = []
+    n = 0
+    for r in ranges:
+        size = r[2] - r[1]
+        if group and n + size > budget:
+            out.append(_RangesPartition(group))
+            group, n = [], 0
+        group.append(r)
+        n += size
+    if group:
+        out.append(_RangesPartition(group))
+    return out
 
 
 class ConfluentAvroStreamReader(DataSourceStreamReader):
@@ -327,8 +366,9 @@ class ConfluentAvroStreamReader(DataSourceStreamReader):
 
     Division of labor mirrors the Kafka source: the DRIVER only probes
     offsets (`latestOffset` seeks header-to-header, 4 bytes/record,
-    no bodies) and plans one InputPartition per (file, record-range);
-    EXECUTORS decode their range and ship it as pyarrow.RecordBatches
+    no bodies) and packs the new (file, record-range) pieces into
+    InputPartitions of up to PARTITION_RECORDS records (`pack_ranges`);
+    EXECUTORS decode their ranges and ship them as pyarrow.RecordBatches
     -- no driver-side materialization, no per-record Python tuples.
     Replay between checkpointed offsets re-plans the identical ranges
     over the immutable segments (exactly-once offsets contract)."""
@@ -393,39 +433,36 @@ class ConfluentAvroStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         consumed = start.get("consumed", {})
-        out = []
+        ranges = []
         for fname, stop in sorted(end.get("consumed", {}).items()):
             skip = int(consumed.get(fname, 0))
             if int(stop) > skip:
-                out.append(
-                    _RangePartition(
-                        os.path.join(self.dir, fname), skip, int(stop)
-                    )
+                ranges.append(
+                    (os.path.join(self.dir, fname), skip, int(stop))
                 )
-        return out
+        return pack_ranges(ranges)
 
-    def read(self, partition: _RangePartition):
-        # executor-side: decode only this partition's record range
+    def read(self, partition: _RangesPartition):
+        # executor-side: decode only this partition's record ranges
         from nearscan_kafka_streams_spark.serde.avro import AvroCodec
 
-        if self.arrow:
-            yield from _batches_auto(
-                partition.path,
-                partition.skip,
-                partition.stop,
-                self.avro_schema,
-                self.names,
-                self.arrow_schema,
-                self.batch_size,
-                vectorized=self.vectorized,
-            )
-        else:
-            codec = AvroCodec(self.avro_schema)
-            framed = read_framed_log(
-                partition.path, partition.skip, partition.stop
-            )
-            for row in _decode_rows(framed, codec, self.names):
-                yield tuple(row[n] for n in self.names)
+        codec = None if self.arrow else AvroCodec(self.avro_schema)
+        for path, skip, stop in partition.ranges:
+            if self.arrow:
+                yield from _batches_auto(
+                    path,
+                    skip,
+                    stop,
+                    self.avro_schema,
+                    self.names,
+                    self.arrow_schema,
+                    self.batch_size,
+                    vectorized=self.vectorized,
+                )
+            else:
+                framed = read_framed_log(path, skip, stop)
+                for row in _decode_rows(framed, codec, self.names):
+                    yield tuple(row[n] for n in self.names)
 
     def commit(self, end: dict) -> None:
         # segments are immutable; nothing to clean up at offset commit

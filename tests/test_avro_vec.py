@@ -249,3 +249,59 @@ def test_empty_batch():
     buf, starts = _pack([])
     batch = dec.decode_batch(buf, starts)
     assert batch.num_rows == 0
+
+
+@pytest.mark.parametrize("vectorized", [True, False])
+def test_short_frame_rejected_on_both_lanes(tmp_path, vectorized):
+    """A record shorter than the 5-byte Confluent header has no body:
+    both lanes raise the same ValueError instead of the vector lane
+    decoding the next record's bytes."""
+    from nearscan_kafka_streams_spark.serde.avro import (
+        SHORT_FRAME_MSG,
+        confluent_frame,
+    )
+    from nearscan_kafka_streams_spark.sources.pyds import (
+        _batches_auto,
+        write_framed_log,
+    )
+
+    struct = TOPIC_SCHEMAS["receipts"][0]
+    avro = avro_schema_from_struct(
+        struct, name="Value", namespace="near.indexer.receipts",
+        precision_overrides=AVRO_PRECISION_OVERRIDES,
+    )
+    codec = AvroCodec(avro)
+    rng = random.Random(5)
+    good = [confluent_frame(1, codec.encode(_rand_record(struct, rng, {})))
+            for _ in range(3)]
+    path = str(tmp_path / "log.bin")
+    write_framed_log([good[0], b"\x00\x00\x01", good[1], good[2]], path)
+    names = [f.name for f in struct.fields]
+    with pytest.raises(ValueError, match="shorter than") as exc:
+        list(_batches_auto(path, 0, None, avro, names, _arrow_schema(struct),
+                           4096, vectorized=vectorized))
+    assert str(exc.value) == SHORT_FRAME_MSG
+
+
+def test_short_frame_rejected_by_scan_and_unframe(tmp_path):
+    from nearscan_kafka_streams_spark.serde.avro import (
+        SHORT_FRAME_MSG,
+        confluent_unframe,
+    )
+    from nearscan_kafka_streams_spark.sources.pyds import (
+        _scan_frame_bodies,
+        write_framed_log,
+    )
+
+    for frame in (b"", b"\x00", b"\x00\x00\x00\x00"):
+        with pytest.raises(ValueError) as exc:
+            confluent_unframe(frame)
+        assert str(exc.value) == SHORT_FRAME_MSG
+    path = str(tmp_path / "log.bin")
+    write_framed_log([b"\x00\x00\x00\x00\x01\x02", b"\x00\x00"], path)
+    with pytest.raises(ValueError) as exc:
+        _scan_frame_bodies(path)
+    assert str(exc.value) == SHORT_FRAME_MSG
+    # a short record outside the requested range is not decoded
+    buf, starts = _scan_frame_bodies(path, 0, 1)
+    assert list(starts) == [9]

@@ -5,6 +5,7 @@ reference's wire format without a broker or connector jar."""
 from __future__ import annotations
 
 import json
+import os
 
 from nearscan_kafka_streams_spark.schemas import (
     RECEIPTS_SCHEMA,
@@ -143,6 +144,97 @@ def test_streaming_source_resumes_from_checkpoint(spark, tmp_path):
     assert (
         after.where("receipt_id = 'rx-appended'").count() == 1
     )
+
+
+def _stage_segments(spark, tmp_path, n_files, per_file=5):
+    """n_files small segments of ``per_file`` receipts each, with
+    distinct receipt ids (the live feed's shape)."""
+    from fixtures_near import to_dataframes
+
+    r, _, _, _ = to_dataframes(spark)
+    base = r.first().asDict()
+    codec = AvroCodec(avro_value_schema("receipts"))
+    d = tmp_path / "segments"
+    ids = []
+    for i in range(n_files):
+        framed = []
+        for k in range(per_file):
+            row = dict(base, receipt_id=f"rx-{i}-{k}")
+            framed.append(confluent_frame(7, codec.encode(row)))
+            ids.append(row["receipt_id"])
+        write_framed_log(framed, str(d / f"seg-{i:05d}.bin"))
+    return str(d), ids
+
+
+def _stream_reader(path):
+    from nearscan_kafka_streams_spark.sources.pyds import (
+        ConfluentAvroStreamReader,
+    )
+
+    return ConfluentAvroStreamReader(
+        RECEIPTS_SCHEMA,
+        {"path": path, "avro_schema": json.dumps(avro_value_schema("receipts"))},
+    )
+
+
+def test_stream_partitions_pack_small_segments(spark, tmp_path):
+    """Many small segments share a few InputPartitions; every segment's
+    new range appears exactly once and whole, in file order."""
+    path, ids = _stage_segments(spark, tmp_path, n_files=12)
+    reader = _stream_reader(path)
+    end = reader.latestOffset()
+    parts = reader.partitions(reader.initialOffset(), end)
+    assert len(parts) < 12
+    ranges = [r for p in parts for r in p.ranges]
+    assert [(os.path.basename(f), a, b) for f, a, b in ranges] == [
+        (f, 0, n) for f, n in sorted(end["consumed"].items())
+    ]
+    assert sum(b - a for _, a, b in ranges) == len(ids)
+
+    # a later offset plans only the unread tail of each segment
+    half = {f: n // 2 for f, n in end["consumed"].items()}
+    tail = [r for p in reader.partitions({"consumed": half}, end)
+            for r in p.ranges]
+    assert [(os.path.basename(f), a) for f, a, _ in tail] == [
+        (f, half[f]) for f in sorted(end["consumed"]) if half[f] < end["consumed"][f]
+    ]
+
+
+def test_pack_ranges_never_splits_and_isolates_large_ranges():
+    from nearscan_kafka_streams_spark.sources.pyds import pack_ranges
+
+    ranges = [("a", 0, 3), ("b", 0, 4), ("c", 5, 30), ("d", 0, 2),
+              ("e", 0, 9), ("f", 0, 1)]
+    parts = pack_ranges(ranges, budget=10)
+    assert [p.ranges for p in parts] == [
+        [("a", 0, 3), ("b", 0, 4)],
+        [("c", 5, 30)],  # over budget: alone, not split
+        [("d", 0, 2)],
+        [("e", 0, 9), ("f", 0, 1)],
+    ]
+    assert pack_ranges([]) == []
+
+
+def test_stream_over_packed_segments_yields_staged_rows(spark, tmp_path):
+    path, ids = _stage_segments(spark, tmp_path, n_files=12)
+    spark.dataSource.register(ConfluentAvroDataSource)
+    out = str(tmp_path / "stream_out")
+    q = (
+        spark.readStream.format("confluentavro")
+        .schema(RECEIPTS_SCHEMA)
+        .option("path", path)
+        .option("avro_schema", json.dumps(avro_value_schema("receipts")))
+        .load()
+        .select("receipt_id")
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(r["receipt_id"] for r in spark.read.parquet(out).collect())
+    assert got == sorted(ids)
 
 
 def test_write_leg_round_trips(spark, tmp_path):

@@ -91,6 +91,34 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert final["acct-0"] == 999 and final["acct-1"] == 1 and len(final) == 64
 
 
+def test_upsert_many_buckets_one_file_per_bucket(spark, tmp_path):
+    """A batch touching more buckets than there are cores writes with at
+    most one task per core, still one part file per bucket directory."""
+    target = str(tmp_path / "balances_wide")
+    upsert = foreach_batch_upsert("account", target, num_buckets=64)
+    cores = spark.sparkContext.defaultParallelism
+    for batch_id in range(2):  # first write, then a merge over the store
+        upsert(
+            spark.createDataFrame(
+                [(f"acct-{i}", i + batch_id, batch_id) for i in range(500)],
+                ["account", "balance", "ts"],
+            ),
+            batch_id,
+        )
+        manifest = json.loads((Path(target) / "_MANIFEST.json").read_text())
+        gens = set(manifest["buckets"].values())
+        assert len(gens) == 1  # every touched bucket was rewritten
+        gen = Path(target) / gens.pop()
+        dirs = sorted(gen.glob("_bucket=*"))
+        assert len(dirs) == len(manifest["buckets"]) > cores
+        files = [list(d.glob("part-*.parquet")) for d in dirs]
+        assert all(len(f) == 1 for f in files), files
+        # part-<task partition id>-...: at most one writing task per core
+        assert len({f[0].name.split("-")[1] for f in files}) <= cores
+    final = _final(spark, target)
+    assert len(final) == 500 and final["acct-7"] == 8
+
+
 def test_upsert_crash_between_write_and_swap_preserves_store(spark, tmp_path):
     """A generation dir written without a manifest swap (crash window)
     must not corrupt reads, and a retry of the batch must converge."""

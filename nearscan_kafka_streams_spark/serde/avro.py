@@ -191,7 +191,12 @@ class AvroCodec:
     # -- decode
 
     def decode(self, data: bytes) -> dict:
-        value, _ = self._read(self.schema, data, 0)
+        try:
+            value, end = self._read(self.schema, data, 0)
+        except (IndexError, _struct.error):
+            end = None  # the record runs past the end of ``data``
+        if end != len(data):
+            raise ValueError(BODY_LENGTH_MSG)
         return value
 
     def _read(self, schema, buf: bytes, pos: int):
@@ -292,6 +297,9 @@ SHORT_FRAME_MSG = (
     f"not Confluent wire format (frame shorter than the "
     f"{FRAME_HEADER_LEN}-byte header)"
 )
+# a frame's body holds exactly one record: a record that ends before
+# the body does, or runs past it, is not this schema's value
+BODY_LENGTH_MSG = "Avro body length does not match its record"
 
 
 def confluent_unframe(data: bytes) -> tuple[int, bytes]:

@@ -31,6 +31,8 @@ import json
 import numpy as np
 import pyarrow as pa
 
+from nearscan_kafka_streams_spark.serde.avro import BODY_LENGTH_MSG
+
 # union branch bytes: zigzag(0) = 0x00, zigzag(1) = 0x02 -- always one
 # byte, so a ["null", T] branch index is a single-byte gather
 _BRANCH_NULL = 0
@@ -127,11 +129,14 @@ class VectorizedDecoder:
         self,
         buf: np.ndarray,
         body_starts: np.ndarray,
+        body_ends: np.ndarray | None = None,
     ) -> pa.RecordBatch:
         """Decode the records whose Avro bodies start at ``body_starts``
         within ``buf`` (uint8, padded by >= 10 bytes past the last
         record so finished-lane gathers stay in bounds) into one
-        RecordBatch typed by ``arrow_schema``."""
+        RecordBatch typed by ``arrow_schema``.  Given ``body_ends``,
+        a record that does not end exactly at its body's end raises
+        ``ValueError`` (the row codec's check, over the whole batch)."""
         n = len(body_starts)
         pos = body_starts.astype(np.int64, copy=True)
         all_lanes = np.ones(n, dtype=bool)
@@ -154,6 +159,8 @@ class VectorizedDecoder:
             )
             if arrow_type is not None:
                 columns[name] = arr
+        if body_ends is not None and (pos != body_ends).any():
+            raise ValueError(BODY_LENGTH_MSG)
         return pa.RecordBatch.from_arrays(
             [columns[f.name] for f in self.arrow_schema],
             schema=self.arrow_schema,

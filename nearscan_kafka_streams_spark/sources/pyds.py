@@ -19,6 +19,8 @@ analog).  The stream reader packs consecutive new (file, record-range)
 pieces into one InputPartition up to PARTITION_RECORDS records: a
 trigger over many small segments runs a few tasks instead of one per
 segment, while a range at or above the budget still gets its own task.
+Each topic is its own source scan, so a catch-up replay still decodes
+its topics in parallel (SCALE.md measures the replay both ways).
 The vectorized lane loads each file of a task whole into one buffer
 before decoding its range; only the row lane streams.
 Decode uses the vectorized numpy lane (`serde/avro_vec.py`) with the
@@ -117,11 +119,11 @@ def _arrow_batches(framed_iter, codec, names, arrow_schema, batch_size):
 
 def _scan_frame_bodies(path: str, skip: int = 0, stop: int | None = None):
     """Load a framed log into one padded uint8 buffer and return
-    ``(buf, body_starts)`` for records [skip, stop): the vectorized
-    decoder's input.  The header walk is Python but touches 4 bytes
-    per record; bodies are never copied out (the decoder gathers from
-    ``buf`` in place).  The 16-byte zero pad keeps finished-lane
-    gathers in bounds at the final record."""
+    ``(buf, body_starts, body_ends)`` for records [skip, stop): the
+    vectorized decoder's input.  The header walk is Python but touches
+    4 bytes per record; bodies are never copied out (the decoder
+    gathers from ``buf`` in place).  The 16-byte zero pad keeps
+    finished-lane gathers in bounds at the final record."""
     import numpy as np
 
     from nearscan_kafka_streams_spark.serde.avro import (
@@ -137,6 +139,7 @@ def _scan_frame_bodies(path: str, skip: int = 0, stop: int | None = None):
         raise EOFError(f"{path}: short read ({got} of {size} bytes)")
     mem = memoryview(buf)  # header walk: 4 bytes/record, zero-copy
     starts: list[int] = []
+    ends: list[int] = []
     pos = 0
     i = 0
     while pos < size:
@@ -153,13 +156,14 @@ def _scan_frame_bodies(path: str, skip: int = 0, stop: int | None = None):
             if n < FRAME_HEADER_LEN:
                 raise ValueError(SHORT_FRAME_MSG)
             starts.append(pos + 4)
+            ends.append(pos + 4 + n)
         pos += 4 + n
         i += 1
     frame_starts = np.asarray(starts, dtype=np.int64)
     if len(frame_starts) and (buf[frame_starts] != 0).any():
         raise ValueError("not Confluent wire format (bad magic byte)")
     # skip magic (1) + schema id (4): Avro body start
-    return buf, frame_starts + 5
+    return buf, frame_starts + 5, np.asarray(ends, dtype=np.int64)
 
 
 def _batches_auto(
@@ -183,7 +187,9 @@ def _batches_auto(
     ):
         try:
             decoder = VectorizedDecoder(avro_schema, arrow_schema)
-            buf, body_starts = _scan_frame_bodies(path, skip, stop)
+            buf, body_starts, body_ends = _scan_frame_bodies(
+                path, skip, stop
+            )
         except Exception:  # noqa: BLE001
             decoder = None
     yielded = 0
@@ -191,7 +197,9 @@ def _batches_auto(
         try:
             for lo in range(0, len(body_starts), batch_size):
                 batch = decoder.decode_batch(
-                    buf, body_starts[lo : lo + batch_size]
+                    buf,
+                    body_starts[lo : lo + batch_size],
+                    body_ends[lo : lo + batch_size],
                 )
                 yield batch
                 yielded += batch.num_rows

@@ -253,10 +253,13 @@ def test_empty_batch():
 
 @pytest.mark.parametrize("vectorized", [True, False])
 def test_short_frame_rejected_on_both_lanes(tmp_path, vectorized):
-    """A record shorter than the 5-byte Confluent header has no body:
-    both lanes raise the same ValueError instead of the vector lane
-    decoding the next record's bytes."""
+    """A frame whose body does not hold exactly one record -- shorter
+    than the 5-byte Confluent header, a bare header, a body cut short
+    or followed by stray bytes -- raises the same ValueError on both
+    lanes instead of the vector lane decoding the next record's
+    bytes."""
     from nearscan_kafka_streams_spark.serde.avro import (
+        BODY_LENGTH_MSG,
         SHORT_FRAME_MSG,
         confluent_frame,
     )
@@ -274,13 +277,20 @@ def test_short_frame_rejected_on_both_lanes(tmp_path, vectorized):
     rng = random.Random(5)
     good = [confluent_frame(1, codec.encode(_rand_record(struct, rng, {})))
             for _ in range(3)]
-    path = str(tmp_path / "log.bin")
-    write_framed_log([good[0], b"\x00\x00\x01", good[1], good[2]], path)
     names = [f.name for f in struct.fields]
-    with pytest.raises(ValueError, match="shorter than") as exc:
-        list(_batches_auto(path, 0, None, avro, names, _arrow_schema(struct),
-                           4096, vectorized=vectorized))
-    assert str(exc.value) == SHORT_FRAME_MSG
+    for i, (bad, msg) in enumerate([
+        (b"\x00\x00\x01", SHORT_FRAME_MSG),
+        (confluent_frame(1, b""), BODY_LENGTH_MSG),
+        (good[1][:-1], BODY_LENGTH_MSG),
+        (good[1] + b"\x00", BODY_LENGTH_MSG),
+    ]):
+        path = str(tmp_path / f"log-{i}.bin")
+        write_framed_log([good[0], bad, good[1], good[2]], path)
+        with pytest.raises(ValueError) as exc:
+            list(_batches_auto(path, 0, None, avro, names,
+                               _arrow_schema(struct), 4096,
+                               vectorized=vectorized))
+        assert str(exc.value) == msg, bad
 
 
 def test_short_frame_rejected_by_scan_and_unframe(tmp_path):
@@ -303,5 +313,6 @@ def test_short_frame_rejected_by_scan_and_unframe(tmp_path):
         _scan_frame_bodies(path)
     assert str(exc.value) == SHORT_FRAME_MSG
     # a short record outside the requested range is not decoded
-    buf, starts = _scan_frame_bodies(path, 0, 1)
+    buf, starts, ends = _scan_frame_bodies(path, 0, 1)
     assert list(starts) == [9]
+    assert list(ends) == [10]
